@@ -171,56 +171,6 @@ def _replay(spark, input_path: str, table_root: str, n_events: int,
     return min(times)
 
 
-def _replay_ab(spark, input_path: str, table_root: str, n_events: int,
-               modes: tuple = ("cow", "cow-latemat"), reps: int = 2) -> dict:
-    """INTERLEAVED A/B replay (the only trustworthy design comparison on
-    this noisy host): warmup once, then alternate modes rep by rep into
-    fresh tables; min per mode. Used for the round-4 late-materialization
-    prototype (VERDICT r3 #10) — no default change unless the A/B wins."""
-    from pyspark.sql import functions as F, types as T
-
-    from datax_spark.cdc.apply import apply_changes
-    from datax_spark.functions.extract import with_enrichment
-    from datax_spark.lake.table import LakeTable
-
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType(), False),
-            T.StructField("warc_ts", T.TimestampType(), True),
-            T.StructField("html", T.BinaryType(), True),
-            T.StructField("text", T.StringType(), True),
-            T.StructField("lang", T.StringType(), True),
-            T.StructField("lang_id", T.StringType(), True),
-            T.StructField("n_tokens", T.LongType(), True),
-            T.StructField("quality", T.DoubleType(), True),
-            T.StructField("fp", T.LongType(), True),
-        ]
-    )
-    ch = spark.read.parquet(input_path)
-    wt = LakeTable.create(spark, f"{table_root}_warm", schema, key_col="url",
-                          num_buckets=NUM_BUCKETS)
-    apply_changes(wt, ch, batch_id=0, transform=with_enrichment, merge_mode=modes[0])
-    shutil.rmtree(f"{table_root}_warm", ignore_errors=True)
-
-    per = n_events // N_BATCHES
-    best: dict[str, float] = {}
-    for rep in range(reps):
-        for mode in modes:
-            root = f"{table_root}_{mode}_r{rep}"
-            t = LakeTable.create(spark, root, schema, key_col="url",
-                                 num_buckets=NUM_BUCKETS)
-            t0 = time.time()
-            for b in range(N_BATCHES):
-                hi = (b + 1) * per if b < N_BATCHES - 1 else n_events + 1
-                batch = ch.filter((F.col("lsn") > b * per) & (F.col("lsn") <= hi))
-                apply_changes(t, batch, batch_id=b, transform=with_enrichment,
-                              merge_mode=mode)
-            dt = time.time() - t0
-            best[mode] = min(best.get(mode, dt), dt)
-            shutil.rmtree(root, ignore_errors=True)
-    return best
-
-
 def _shard_trickle(tmp_base: str, n_rows: int = 400_000, group: int = 4096,
                    budget: int = 4096, triggers: int = 6) -> dict:
     """Per-trigger read cost of a bounded tail crawling ONE large shard
@@ -449,16 +399,8 @@ def main() -> None:
         # ---- shard-tail per-trigger read cost (pruned vs full decode)
         q_times.update(_shard_trickle(base))
 
-        # ---- replay at 4N cores (this session); cow vs cow-latemat
-        # interleaved A/B rides the same timed reps. SKIP_LATEMAT=1 drops
-        # the (twice-rejected) latemat arm — used for the sf1 run where
-        # each replay rep costs ~10x and the A/B question is settled.
-        if os.environ.get("SPARK_GRAFT_BENCH_SKIP_LATEMAT"):
-            t_4n = _replay(spark, f"{base}/changes", f"{base}/t4n", n_events)
-        else:
-            ab = _replay_ab(spark, f"{base}/changes", f"{base}/t4n", n_events)
-            t_4n = ab["cow"]
-            q_times["cdc_replay_4n_latemat"] = round(ab["cow-latemat"], 2)
+        # ---- replay at 4N cores (this session)
+        t_4n = _replay(spark, f"{base}/changes", f"{base}/t4n", n_events)
         t_4n_mor = _replay(spark, f"{base}/changes", f"{base}/t4nm", n_events,
                            merge_mode="mor")
         q_times["cdc_replay_4n_mor"] = round(t_4n_mor, 2)

@@ -492,19 +492,16 @@ class LakeTable:
         """The bucket a key lives in, computed WITHOUT Spark: the pure-
         python xxh64 (bit-verified against the JVM in
         tests/test_oracle_pyref.py) applied exactly as ``bucket_expr``
-        does. String and integral keys supported (the two key types the
-        writer's xxhash64 bucketing is defined over here)."""
+        does to the key column's declared type (string and integral
+        keys; TypeError otherwise)."""
         from datax_spark.oracle.xxh64 import spark_xxhash64
 
-        if isinstance(key_value, str):
-            h = spark_xxhash64(("str", key_value))
-        elif isinstance(key_value, bool):
-            raise TypeError("boolean keys are not bucketable")
-        elif isinstance(key_value, int):
-            h = spark_xxhash64(("long", key_value))
-        else:
-            raise TypeError(f"unsupported key type {type(key_value).__name__}")
-        return int(h % self.num_buckets)
+        return int(spark_xxhash64(self._key_arg(key_value)) % self.num_buckets)
+
+    def _key_arg(self, key_value) -> tuple[str, object]:
+        from datax_spark.oracle.xxh64 import xxh64_arg
+
+        return xxh64_arg(key_value, self.user_schema()[self.key_col].dataType)
 
     def lookup(self, key_value, snapshot_id: int | None = None) -> DataFrame:
         """Point read of one key: manifest-prunes the scan to the key's
@@ -518,13 +515,14 @@ class LakeTable:
         from datax_spark.operators.bloom import might_contain_python
 
         b = self.key_bucket(key_value)
+        key_arg = self._key_arg(key_value)
         m = self._require_meta()
 
         def keep(e: dict) -> bool:
             if e.get("kind") != "delta" or not e.get("key_bloom"):
                 return True
             return might_contain_python(
-                e["key_bloom"], e["bloom_bits"], e["bloom_hashes"], key_value
+                e["key_bloom"], e["bloom_bits"], e["bloom_hashes"], key_arg
             )
 
         return self.read(

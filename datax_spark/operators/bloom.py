@@ -192,27 +192,24 @@ def bucket_blooms_local(
     pays a whole scan+shuffle job to index a few hundred keys; at
     ~13us/key the driver builds these in milliseconds. Callers gate on
     total row count (see ``LakeTable._attach_delta_blooms``) so the
-    driver never loops over a bulk batch. Raises TypeError on key types
-    the python hash does not cover (callers fall back to the
+    driver never loops over a bulk batch. Keys hash by the file's Arrow
+    column type, as the JVM hashed the column. Raises TypeError on key
+    types the python hash does not cover (callers fall back to the
     distributed build)."""
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
 
-    from datax_spark.oracle.xxh64 import spark_xxhash64
+    from datax_spark.oracle.xxh64 import spark_xxhash64, xxh64_arg
 
     out: dict[int, np.ndarray] = {}
     for path, bucket in file_buckets:
         col = pq.read_table(path, columns=[key_col])[key_col]
+        key_type = from_arrow_type(col.type)
         w = out.setdefault(bucket, np.zeros(num_bits // 64, dtype=np.uint64))
         for v in col.to_pylist():
             if v is None:
                 continue
-            if isinstance(v, str):
-                pair = ("str", v)
-            elif isinstance(v, bool) or not isinstance(v, int):
-                raise TypeError(
-                    f"unsupported bloom key type {type(v).__name__}")
-            else:
-                pair = ("long", v)
+            pair = xxh64_arg(v, key_type)
             h1 = spark_xxhash64(pair, ("int", 0x5EED1)) % num_bits
             h2 = spark_xxhash64(pair, ("int", 0x5EED2)) % num_bits
             for i in range(num_hashes):
@@ -222,26 +219,19 @@ def bucket_blooms_local(
 
 
 def might_contain_python(
-    words: bytes, num_bits: int, num_hashes: int, key_value
+    words: bytes, num_bits: int, num_hashes: int, key_arg
 ) -> bool:
     """Driver-side probe of a stored bloom, bit-identical to the JVM
     build: the pure-python xxh64 (oracle/xxh64.py, bit-verified against
-    Spark) replays ``_positions`` exactly. String keys hash as StringType
-    columns, ints as LongType — the same mapping as
-    ``LakeTable.key_bucket``. Used by manifest-level file skipping where
-    no Spark job should run at all (a point lookup's planning step)."""
+    Spark) replays ``_positions`` exactly. ``key_arg`` is the probed key
+    as a ``spark_xxhash64`` argument: the ``(kind, value)`` pair
+    ``xxh64_arg`` derives from the key column's type (a bare str hashes
+    as a string column). Used by manifest-level file skipping where no
+    Spark job should run at all (a point lookup's planning step)."""
     from datax_spark.oracle.xxh64 import spark_xxhash64
 
-    if isinstance(key_value, str):
-        pair = ("str", key_value)
-    elif isinstance(key_value, bool):
-        raise TypeError("boolean keys are not bloom-indexable")
-    elif isinstance(key_value, int):
-        pair = ("long", key_value)
-    else:
-        raise TypeError(f"unsupported key type {type(key_value).__name__}")
-    h1 = spark_xxhash64(pair, ("int", 0x5EED1)) % num_bits
-    h2 = spark_xxhash64(pair, ("int", 0x5EED2)) % num_bits
+    h1 = spark_xxhash64(key_arg, ("int", 0x5EED1)) % num_bits
+    h2 = spark_xxhash64(key_arg, ("int", 0x5EED2)) % num_bits
     arr = np.frombuffer(words, dtype=np.uint64)
     for i in range(num_hashes):
         p = (h1 + i * h2) % num_bits

@@ -90,7 +90,12 @@ def log_ratio_table(
     """Per-bucket log p_target(b) - log p_raw(b), Laplace-smoothed with
     ``alpha``, quantized to 12 dp. Driver-side python over ≤ B buckets —
     deliberately NOT Spark math, so the floats are identical to the
-    pure-python oracle and the table is computed once, not per row."""
+    pure-python oracle and the table is computed once, not per row.
+
+    Raises ValueError when a ratio does not fit the ``decimal(14,12)``
+    it is later cast to (|lr| ≥ 100): the cast would turn it into a
+    silent NULL. Only a vanishing ``alpha`` gets there, since an empty
+    bucket's smoothed probability is then tiny."""
     import math
 
     t_tot = sum(target_counts.values()) + alpha * num_buckets
@@ -100,7 +105,13 @@ def log_ratio_table(
         ct = target_counts.get(b, 0) + alpha
         cr = raw_counts.get(b, 0) + alpha
         lr = math.log(ct / t_tot) - math.log(cr / r_tot)
-        out.append((b, Decimal(repr(lr)).quantize(_LR_QUANT, rounding=ROUND_HALF_UP)))
+        d = Decimal(repr(lr)).quantize(_LR_QUANT, rounding=ROUND_HALF_UP)
+        if abs(d) >= 100:
+            raise ValueError(
+                f"log ratio {lr:.6g} of bucket {b} is outside decimal(14,12) "
+                f"(|lr| < 100); alpha={alpha!r} is too small to smooth "
+                "empty buckets")
+        out.append((b, d))
     return out
 
 

@@ -8,13 +8,16 @@ argument i becomes the seed for argument i+1; NULL arguments are
 skipped. Default seed 42, result exposed as a signed 64-bit long —
 exactly the column value Spark produces.
 
-Used only by the oracle pyrefs (see package docstring); the engine
-itself always calls the JVM expression.
+Used by the oracle pyrefs (see package docstring) and by the lake's
+driver-side key math (bucket of a key, delta-file bloom build and probe),
+which must land exactly where the JVM expression put each key.
 """
 
 from __future__ import annotations
 
 import struct
+
+from pyspark.sql import types as T
 
 _M64 = (1 << 64) - 1
 _P1 = 0x9E3779B185EBCA87
@@ -125,3 +128,28 @@ def spark_xxhash64(*args) -> int:
         else:
             raise ValueError(f"unknown kind {kind!r}")
     return _to_signed(h)
+
+
+# Spark's per-type xxhash64 dispatch for the key column types the lake
+# buckets on: byte/short/int columns take the 4-byte hashInt, bigint the
+# 8-byte hashLong, strings their UTF-8 bytes.
+_KIND_BY_TYPE = {
+    T.ByteType: "int", T.ShortType: "int", T.IntegerType: "int",
+    T.LongType: "long", T.StringType: "str",
+}
+
+
+def xxh64_arg(value, data_type: T.DataType) -> tuple[str, object]:
+    """The :func:`spark_xxhash64` argument that hashes ``value`` exactly
+    as ``F.xxhash64`` hashes it in a column of ``data_type``. The kind
+    comes from the column's declared type, never from the Python value:
+    an int32 key and an int64 key with the same value hash differently.
+    Raises TypeError for other column types, and for a value that cannot
+    live in the column (a bool, or a str for an integral key)."""
+    kind = _KIND_BY_TYPE.get(type(data_type))
+    if kind is None:
+        raise TypeError(f"unsupported key type {data_type.simpleString()}")
+    if isinstance(value, bool) or not isinstance(value, str if kind == "str" else int):
+        raise TypeError(
+            f"{type(value).__name__} key for a {data_type.simpleString()} column")
+    return kind, value

@@ -17,3 +17,18 @@ def spark():
 @pytest.fixture()
 def tmp_table_root(tmp_path):
     return str(tmp_path / "table")
+
+
+@pytest.fixture(autouse=True)
+def _no_leaked_streaming_queries(request):
+    """A test that leaves a streaming query running fails, and the query
+    is stopped so it cannot keep working through the rest of the suite."""
+    s = request.getfixturevalue("spark") if "spark" in request.fixturenames else None
+    yield
+    if s is None:
+        return
+    leaked = s.streams.active
+    for q in leaked:
+        q.stop()
+    if leaked:
+        pytest.fail(f"test left streaming queries running: {[q.name or q.id for q in leaked]}")

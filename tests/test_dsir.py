@@ -3,6 +3,7 @@ partition-order independence, Gumbel-race determinism."""
 
 from decimal import Decimal
 
+import pytest
 from pyspark.sql import functions as F
 
 from datax_spark.operators.dsir import (
@@ -87,6 +88,16 @@ def test_weights_match_pure_python(spark):
     # direction: the french doc must be MORE target-like (target = non-en)
     # than the english-only repetition doc
     assert rows[1][1] > rows[4][1]
+
+
+def test_tiny_alpha_log_ratio_out_of_decimal_range_raises():
+    """|lr| ≥ 100 does not fit decimal(14,12); the cast would make it a
+    silent NULL, so the table refuses to build and names alpha."""
+    with pytest.raises(ValueError, match="alpha=1e-60"):
+        log_ratio_table({0: 5}, {1: 5}, num_buckets=2, alpha=1e-60)
+    # a ratio just inside the range still builds
+    lr = dict(log_ratio_table({0: 5}, {1: 5}, num_buckets=2, alpha=1e-40))
+    assert 90 < lr[0] < 100 and -100 < lr[1] < -90
 
 
 def test_weights_partition_order_independent(spark):

@@ -64,7 +64,7 @@ def test_stream_enrich_matches_batch_plan(spark, tmp_path):
          .option("path", sink)
          .option("checkpointLocation", f"{base}/ckpt")
          .trigger(availableNow=True).start())
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     got = spark.read.parquet(sink)
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 

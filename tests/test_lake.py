@@ -160,18 +160,33 @@ def test_lookup_point_read_prunes_to_one_bucket(spark, tmp_table_root):
     assert t.lookup("https://x/57").collect()[0]["lang"] == "zz"
     assert t.lookup("https://x/58").collect() == []
 
-    # integral-key table: python bucket math covers long keys too
-    import pyspark.sql.types as T2
-
-    t2 = LakeTable.create(
-        spark, tmp_table_root + "_int",
-        T2.StructType([T2.StructField("k", T2.LongType(), False),
-                       T2.StructField("v", T2.StringType(), True)]),
-        key_col="k", num_buckets=4,
-    )
-    bulk_load(t2, spark.range(50).select(F.col("id").alias("k"),
-                                         F.lit("x").alias("v")))
-    assert [r["k"] for r in t2.lookup(7).collect()] == [7]
+    # integral-key tables: the python bucket and bloom math follow the
+    # key column's declared type (Spark hashes int with the 4-byte
+    # hashInt, bigint with the 8-byte hashLong), so every key of either
+    # table is found, through a MoR delta too
+    n = 16
+    for kt in (T.LongType(), T.IntegerType()):
+        t2 = LakeTable.create(
+            spark, f"{tmp_table_root}_{kt.simpleString()}",
+            T.StructType([T.StructField("k", kt, False),
+                          T.StructField("warc_ts", T.TimestampType(), True),
+                          T.StructField("v", T.StringType(), True)]),
+            key_col="k", num_buckets=4,
+        )
+        bulk_load(t2, spark.range(n).select(
+            F.col("id").cast(kt).alias("k"),
+            F.timestamp_seconds(F.lit(1704067200)).alias("warc_ts"),
+            F.lit("x").alias("v")))
+        merge_into(t2, spark.createDataFrame(
+            [(7, late, "y", 999_999, "U")],
+            "k int, warc_ts timestamp, v string, lsn long, op string",
+        ), batch_id=1, merge_mode="mor")
+        jvm = {r["k"]: r["b"] for r in
+               t2.read().select("k", bucket_expr("k", 4).alias("b")).collect()}
+        assert {k: t2.key_bucket(k) for k in range(n)} == jvm
+        for k in range(n):
+            got = [r["v"] for r in t2.lookup(k).collect()]
+            assert got == ["y" if k == 7 else "x"], (kt, k)
 
     with pytest.raises(TypeError):
         t2.key_bucket(True)
@@ -334,8 +349,9 @@ def test_stats_manifest_report(spark, tmp_table_root):
 def test_driver_bloom_build_bit_identical(spark, tmp_path):
     """r6: trickle-sized delta writes build their key blooms on the
     driver (bucket_blooms_local) instead of via a Spark job — the bytes
-    must be identical to the distributed build, for string AND long
-    keys, so manifest pruning semantics cannot depend on batch size."""
+    must be identical to the distributed build, for string, long AND int
+    keys (int32 keys hash with the 4-byte hashInt), so manifest pruning
+    semantics cannot depend on batch size."""
     import glob
     import os
 
@@ -343,10 +359,11 @@ def test_driver_bloom_build_bit_identical(spark, tmp_path):
 
     from datax_spark.operators.bloom import bucket_blooms, bucket_blooms_local
 
-    for typ in ("str", "long"):
+    keys = {"str": F.concat(F.lit("k-"), F.col("id").cast("string")),
+            "long": F.col("id"), "int": F.col("id").cast("int")}
+    for typ, key in keys.items():
         df = spark.range(300).select(
-            (F.concat(F.lit("k-"), F.col("id").cast("string"))
-             if typ == "str" else F.col("id")).alias("k"),
+            key.alias("k"),
             F.pmod(F.col("id"), F.lit(4)).alias("_bucket"),
         )
         out = str(tmp_path / f"bl_{typ}")

@@ -84,7 +84,7 @@ def test_windowed_counts_streaming_with_watermark(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     total = spark.sql("SELECT sum(n_events) s FROM win_counts").first()["s"]
     assert total == 2000
 

@@ -172,28 +172,22 @@ def test_merge_only_rewrites_touched_buckets(spark, tmp_path):
     assert t.read().count() == 400
 
 
-def test_union_and_legacy_join_paths_agree(spark, tmp_path):
+def test_cow_base_then_tail_matches_reference(spark, tmp_path):
+    """A cow merge into a non-empty target: the tail batch carries keys
+    the base already holds (matched) and keys it does not (unmatched);
+    the final state must equal the SQL LWW reference."""
     ch = changes_df(spark, 3000, n_keys=500, partitions=4).cache()
-    t1 = _table(spark, str(tmp_path / "u"))
-    t2 = _table(spark, str(tmp_path / "jb"))
-    t3 = _table(spark, str(tmp_path / "jk"))
-    t4 = _table(spark, str(tmp_path / "js"))
-    # seed all with identical base state so every arm has matched and
-    # unmatched target rows to handle
     base = ch.filter(F.col("lsn") <= 1000)
     tail = ch.filter(F.col("lsn") > 1000)
-    for t in (t1, t2, t3, t4):
-        merge_into(t, base, batch_id=0)
-    merge_into(t1, tail, batch_id=1)  # union-collapse (default cow)
-    merge_into(t2, tail, batch_id=1, merge_mode="cow-join")  # broadcast join
-    merge_into(t3, tail, batch_id=1, merge_mode="cow-join",
-               broadcast_threshold_rows=0)  # key-split join
-    merge_into(t4, tail, batch_id=1, merge_mode="cow-join",
-               broadcast_threshold_rows=0,
-               key_broadcast_threshold_rows=0)  # plain SMJ
-    _assert_same(_state(t1), _state(t2))
-    _assert_same(_state(t2), _state(t3))
-    _assert_same(_state(t3), _state(t4))
+    base_keys = base.select("url").distinct()
+    tail_keys = tail.select("url").distinct()
+    assert tail_keys.intersect(base_keys).count() > 0
+    assert tail_keys.subtract(base_keys).count() > 0
+    t = _table(spark, str(tmp_path / "t"))
+    merge_into(t, base, batch_id=0)
+    snap = merge_into(t, tail, batch_id=1)
+    assert snap["summary"]["merge_strategy"] == "cow-union"
+    _assert_same(_state(t), _expected_final(spark, ch))
 
 
 def test_mor_writes_deltas_only_and_compaction_folds(spark, tmp_path):
@@ -246,37 +240,32 @@ def test_mor_and_cow_byte_identical(spark, tmp_path):
     _assert_same(_state(t_mor), _expected_final(spark, ch))
 
 
-def test_latemat_and_cow_byte_identical(spark, tmp_path):
-    """Round-4 A/B prototype: cow-latemat (winner-id broadcast instead of
-    the pre-dedup payload exchange) must produce byte-identical state to
-    cow across a non-empty target, deletes, out-of-order arrivals, and a
-    post-dedup transform (the transform sees the same winner rows)."""
+def test_cow_transform_runs_once_on_winners(spark, tmp_path):
+    """cow across a non-empty target, deletes and out-of-order arrivals
+    with a post-dedup transform: the transform runs once per batch on
+    the LWW winners only, and re-applying an older batch is a no-op."""
     ch = changes_df(spark, 3000, n_keys=500, partitions=4).cache()
-    t1 = _table(spark, str(tmp_path / "cow"))
-    t2 = _table(spark, str(tmp_path / "lm"))
+    t = _table(spark, str(tmp_path / "cow"))
     base = ch.filter(F.col("lsn") <= 1000)
     tail = ch.filter(F.col("lsn") > 1000)
 
     def tag(df):
         return df.withColumn("lang", F.concat(F.lit("x-"), F.col("lang")))
 
-    for t, mode in ((t1, "cow"), (t2, "cow-latemat")):
-        merge_into(t, base, batch_id=0, merge_mode=mode, post_dedup_transform=tag)
-        merge_into(t, tail, batch_id=1, merge_mode=mode, post_dedup_transform=tag)
-    _assert_same(_state(t1), _state(t2))
-    # the transform ran on winners exactly once per batch in both modes
-    assert t1.read().filter(~F.col("lang").startswith("x-")).count() == 0
-    assert t1.read().filter(F.col("lang").startswith("x-x-")).count() == 0
-    # and replay convergence holds for latemat alone (stale re-apply noop)
-    merge_into(t2, base, batch_id=2, merge_mode="cow-latemat",
-               post_dedup_transform=tag)
-    _assert_same(_state(t1), _state(t2))
+    merge_into(t, base, batch_id=0, post_dedup_transform=tag)
+    merge_into(t, tail, batch_id=1, post_dedup_transform=tag)
+    expected = tag(_expected_final(spark, ch))
+    _assert_same(_state(t), expected)
+    assert t.read().filter(~F.col("lang").startswith("x-")).count() == 0
+    assert t.read().filter(F.col("lang").startswith("x-x-")).count() == 0
+    # stale re-apply of the base batch changes nothing
+    merge_into(t, base, batch_id=2, post_dedup_transform=tag)
+    _assert_same(_state(t), expected)
 
 
-def test_latemat_null_lsn_rows_not_dropped(spark, tmp_path):
-    """Self-review regression: a key whose only change carries a NULL
-    lsn must survive latemat's winner join (null-safe equality), and
-    both modes must agree."""
+def test_cow_null_lsn_rows_not_dropped(spark, tmp_path):
+    """A key whose only change carries a NULL lsn must survive the cow
+    merge (the stats job keeps a null lsn range for its bucket)."""
     rows = [
         (None, "U", "k1", "2024-01-01 00:00:10", "a"),
         (7,    "U", "k2", "2024-01-01 00:00:05", "b"),
@@ -291,9 +280,22 @@ def test_latemat_null_lsn_rows_not_dropped(spark, tmp_path):
     ch = spark.createDataFrame(rows, sch).select(
         "lsn", "op", "url", F.col("ts_s").cast("timestamp").alias("warc_ts"),
         F.lit(None).cast("binary").alias("html"), "lang")
-    t1 = _table(spark, str(tmp_path / "cow"))
-    t2 = _table(spark, str(tmp_path / "lm"))
-    merge_into(t1, ch, batch_id=0, merge_mode="cow")
-    merge_into(t2, ch, batch_id=0, merge_mode="cow-latemat")
-    _assert_same(_state(t1), _state(t2))
-    assert t2.read().count() == 2  # the null-lsn key survived
+    t = _table(spark, str(tmp_path / "cow"))
+    merge_into(t, ch, batch_id=0, merge_mode="cow")
+    assert sorted((r["url"], r["lang"]) for r in t.read().collect()) == [
+        ("k1", "a"), ("k2", "b")]
+
+
+def test_unknown_merge_mode_rejected_before_any_job(spark, tmp_path):
+    """Only cow and mor exist; any other mode fails before a job runs."""
+    t = _table(spark, str(tmp_path / "t"))
+    ch = changes_df(spark, 10, n_keys=5, partitions=1)
+    sc = spark.sparkContext
+    sc.setJobGroup("merge-mode-check", "unknown merge_mode")
+    try:
+        for mode in ("cow-union", "MOR", ""):
+            with pytest.raises(ValueError, match="merge_mode"):
+                merge_into(t, ch, merge_mode=mode)
+        assert list(sc.statusTracker().getJobIdsForGroup("merge-mode-check")) == []
+    finally:
+        sc._jsc.clearJobGroup()

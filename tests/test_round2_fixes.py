@@ -1,14 +1,11 @@
 """Round-2 parity/robustness fixes: dx_filter null semantics + type
-dispatch, NaT-safe vectorized stateful filter, live-row accounting,
-vacuum vs time travel, fence epoch reset, frame-sampling fan-out."""
+dispatch, live-row accounting, vacuum vs time travel, fence epoch reset,
+frame-sampling fan-out."""
 
-import numpy as np
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F, types as T
 
 from datax_spark.functions.transformers import dx_filter
-from datax_spark.cdc.stateful import _TS_MIN, _advance_kernel, lww_advance_filter
 
 
 # ------------------------------------------------------------- dx_filter
@@ -50,52 +47,6 @@ def test_dx_filter_notlike_drops_nulls(spark):
 def test_dx_filter_eq_null_literal(spark):
     kept = sorted(r.id for r in dx_filter(_df(spark), "s", "=", "null").collect())
     assert kept == [1, 2, 4]  # null row dropped
-
-
-# ------------------------------------------------------ stateful kernel
-
-def _brute(rows, state=( _TS_MIN, -1)):
-    """Oracle: tuple-ordering LWW advance over lsn-sorted rows."""
-    hw = state
-    keep = []
-    for ts, lsn in rows:
-        if (ts, lsn) > hw:
-            hw = (ts, lsn)
-            keep.append(True)
-        else:
-            keep.append(False)
-    return keep, hw
-
-
-def test_advance_kernel_matches_bruteforce_randomized():
-    rng = np.random.default_rng(7)
-    for trial in range(50):
-        n = int(rng.integers(1, 40))
-        ts = rng.integers(0, 5, n) * 1_000_000_000  # many ties
-        lsn = np.sort(rng.choice(10_000, size=n, replace=False))
-        state_ts = int(rng.integers(0, 5)) * 1_000_000_000
-        state_lsn = int(rng.integers(0, 10_000))
-        pdf = pd.DataFrame(
-            {"warc_ts": pd.to_datetime(ts), "lsn": lsn}
-        )
-        keep, new_ts, new_lsn = _advance_kernel(pdf, state_ts, state_lsn)
-        want, hw = _brute(list(zip(ts.tolist(), lsn.tolist())), (state_ts, state_lsn))
-        assert keep.tolist() == want, f"trial {trial}"
-        assert (new_ts, new_lsn) == hw
-
-
-def test_advance_filter_null_ts_loses_deterministically(spark):
-    rows = [
-        (1, "I", "k", "2024-01-01 00:01:00", None, "a"),
-        (2, "U", "k", None, None, "nat"),  # null ts: must not crash, must lose
-        (3, "U", "k", "2024-01-01 00:02:00", None, "b"),
-        (4, "U", "m", None, None, "nat-first"),  # null ts on fresh key: first write
-    ]
-    df = spark.createDataFrame(
-        rows, "lsn long, op string, url string, warc_ts string, html binary, lang string"
-    ).withColumn("warc_ts", F.to_timestamp("warc_ts"))
-    got = sorted((r["url"], r["lsn"]) for r in lww_advance_filter(df).collect())
-    assert got == [("k", 1), ("k", 3), ("m", 4)]
 
 
 # ------------------------------------------------------------- lake table
